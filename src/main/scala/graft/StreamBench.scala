@@ -148,17 +148,9 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val splits = sys.env.getOrElse("SPARK_GRAFT_STREAM_SPLITS", "8").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // one micro-batch per split file: keep every progress entry
-      .config("spark.sql.streaming.numRecentProgressUpdates",
-        math.max(100, splits * 2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // one micro-batch per split file: keep every progress entry
+    val spark = GraftSession.local("graft-stream-bench", confs = Map(
+      "spark.sql.streaming.numRecentProgressUpdates" -> math.max(100, splits * 2)))
 
     // optional comma-separated op subset (e.g. the sf1 latency probe
     // runs only sessionize + doc_dedup_probe against the big corpus).
@@ -229,7 +221,7 @@ object StreamBench {
         spark, sfDir, probeIn, _, maxFilesPerTrigger = Some(1)))).flatten
     val totalWall = (System.nanoTime() - t0) / 1e9
 
-    val report = reportJson(sfDir, totalWall, records, cpus, splits)
+    val report = reportJson(sfDir, totalWall, records, GraftSession.cpus.toString, splits)
     val reportPath = java.nio.file.Paths
       .get(sys.env.getOrElse("SPARK_GRAFT_STREAM_REPORT_PATH",
         "target/stream_report.json"))

@@ -4,6 +4,7 @@ import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.GraftSession
 import graft.operators.RetailPipeline
 import graft.pipeline.{FileNotifier, HttpNotifier, LogNotifier, Notifier, Readiness, RunConfig, SmtpNotifier}
 import graft.sources.{CsvTableReader, OutputWriter}
@@ -143,10 +144,7 @@ object RetailEtlApp {
   }
 
   private def session(conf: RunConfig): SparkSession =
-    SparkSession.builder()
-      .appName(s"retail-etl-${conf.mode}-${conf.date}")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    GraftSession.builder(s"retail-etl-${conf.mode}-${conf.date}").getOrCreate()
 
   private def execute(conf: RunConfig): Unit = {
     val spark = session(conf)

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -278,10 +279,14 @@ object GraftFunctions {
     ("lev_banded", classOf[LevBanded],
       (c: Seq[Expression]) => LevBanded(c(0), c(1), c(2))))
 
+  /** Skips a name already bound to its builder from [[all]]: operators
+    * call this on every construction, and each replacement logs a WARN.
+    * Anything else under a graft name is still replaced. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     all.foreach { case (name, _, builder) =>
-      registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq builder))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
   }
 }

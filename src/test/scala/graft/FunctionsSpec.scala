@@ -322,4 +322,34 @@ class FunctionsSpec extends AnyFunSuite with SparkSuite {
       assert(superset.zip(s).forall { case (sup, base) => sup <= base }) // min over more
     }
   }
+
+  test("register twice logs no replacement WARN; a user function under a graft name is replaced") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val s = spark.newSession() // own registry, no graft functions yet
+    val replaced = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("graft-register-spec", null, null, true,
+        Array.empty[Property]) {
+      override def append(e: LogEvent): Unit = {
+        val msg = e.getMessage.getFormattedMessage
+        if (msg.contains("replaced a previously registered function")) replaced.add(msg): Unit
+      }
+    }
+    appender.start()
+    val logger = LogManager.getLogger(s.sessionState.functionRegistry.getClass.getName)
+      .asInstanceOf[CoreLogger]
+    logger.addAppender(appender)
+    Configurator.setLevel(logger.getName, Level.WARN)
+    try {
+      GraftFunctions.register(s)
+      GraftFunctions.register(s)
+      assert(replaced.isEmpty, s"re-registration logged: $replaced")
+    } finally logger.removeAppender(appender)
+    s.udf.register("vec_dot", (a: Int) => a)
+    GraftFunctions.register(s)
+    assert(s.sql("SELECT vec_dot(array(1.0F, 2.0F), array(3.0F, 4.0F))").head()
+      .getDouble(0) === 11.0)
+  }
 }

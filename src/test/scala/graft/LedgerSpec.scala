@@ -1,91 +1,63 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import scala.sys.process._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Measurement-ledger gate: every artifact filename the repo's claims
   * name must resolve to a file in the tree. Two consecutive rounds
   * (r19, r20) closed with BASELINE.md claiming sf10 artifacts that
-  * were never committed; `tools/check_ledger.py` was written to catch
-  * exactly that but nothing ran it at round close. Running the same
-  * scan inside `sbt test` makes a green suite impossible while the
-  * ledger lies — the enforcement hook the tool was missing.
-  *
-  * r22 extends the scan to SOURCE-cited artifacts: round 21 shipped a
-  * scaladoc citing `OPTIMIZATION_r21.md` — a file that did not exist —
-  * and the BASELINE.md-only scan walked straight past it. Any
-  * `OPTIMIZATION_r<N>.md`, `bench_reports/<name>.json` or
-  * `plans/r<N>/<name>` token in `src/**/*.scala` or `OPTIMIZATION_*.md`
-  * must now resolve too (tokens containing `example` are illustrative
-  * placeholders and skipped).
-  *
-  * Mirrors tools/check_ledger.py: artifact-looking tokens are
-  * underscored-stem `.json` names (bare names also probed under
-  * bench_reports/); `*` tokens resolve by glob — via a WALK from the
-  * probe root, because `Files.list` sees only immediate children and a
-  * path-qualified glob token (a starred name under a directory prefix)
-  * could never match (the fixed r21 ADVICE item; Python's `Path.glob`
-  * always resolved these); `target/` paths are transient write-path
-  * documentation, never required at rest.
+  * were never committed; running `tools/check_ledger.py` inside
+  * `sbt test` makes a green suite impossible while the ledger lies.
+  * The script is the one implementation of the scans (BASELINE.md
+  * names and source-cited artifacts); this spec only runs it and
+  * reads each scan's missing lines from its output.
   */
 class LedgerSpec extends AnyFunSuite {
 
-  private val root = java.nio.file.Paths.get(".").toAbsolutePath
+  /** Exit code and combined output of the ledger check over `root`. */
+  private def checkLedger(root: Path): (Int, String) = {
+    val out = new StringBuilder
+    val log = ProcessLogger(l => out.append(l).append('\n'), l => out.append(l).append('\n'))
+    val code = Seq("python3", "tools/check_ledger.py", root.toString).!(log)
+    (code, out.toString)
+  }
 
-  private def resolves(name: String): Boolean = {
-    val rel = name.dropWhile(c => c == '.' || c == '/')
-    if (rel.startsWith("target/")) true
-    else {
-      val dirs =
-        if (rel.contains('/')) Seq(root)
-        else Seq(root, root.resolve("bench_reports"))
-      if (rel.contains('*')) {
-        val matcher = java.nio.file.FileSystems.getDefault
-          .getPathMatcher("glob:" + rel)
-        dirs.exists { d =>
-          val stream = java.nio.file.Files.walk(d, 4)
-          try stream.anyMatch(p => matcher.matches(d.relativize(p)))
-          finally stream.close()
-        }
-      } else dirs.exists(d => java.nio.file.Files.isRegularFile(d.resolve(rel)))
-    }
+  private lazy val (repoCode, repoOut) =
+    checkLedger(java.nio.file.Paths.get(".").toAbsolutePath)
+
+  /** The script's missing-artifact lines (`  <source>: <name>`); fails
+    * unless the script ran to a verdict, so a crash cannot pass. */
+  private def missingLines: Seq[String] = {
+    assert((repoCode == 0 && repoOut.contains("ledger check ok")) ||
+      (repoCode == 1 && repoOut.contains("LEDGER CHECK FAILED")), repoOut)
+    repoOut.linesIterator.filter(_.startsWith("  ")).map(_.trim).toSeq
   }
 
   test("every artifact BASELINE.md names exists in the tree") {
-    val text = java.nio.file.Files.readString(root.resolve("BASELINE.md"))
-    val token = """[A-Za-z0-9_*./-]*[A-Za-z0-9_]+_[A-Za-z0-9_]+\.json""".r
-    val missing = token.findAllIn(text).toSet.toSeq.sorted.filterNot(resolves)
+    val missing = missingLines.filter(_.startsWith("BASELINE.md: "))
     assert(missing.isEmpty,
       s"BASELINE.md names artifacts missing from the tree: $missing " +
         "(commit the artifact or correct the claim)")
   }
 
   test("every source-cited artifact (scaladoc, OPTIMIZATION docs) exists") {
-    import scala.jdk.CollectionConverters._
-    val cited = ("""OPTIMIZATION_r\d+\.md""" +
-      """|bench_reports/[A-Za-z0-9_.*-]+\.json""" +
-      """|plans/r\d+/[A-Za-z0-9_.*-]*[A-Za-z0-9_*-]""").r
-    def scalaFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
-      val stream = java.nio.file.Files.walk(dir)
-      try stream.iterator().asScala.toSeq
-        .filter(_.toString.endsWith(".scala"))
-      finally stream.close()
-    }
-    val optDocs = {
-      val stream = java.nio.file.Files.list(root)
-      try stream.iterator().asScala.toSeq
-        .filter(_.getFileName.toString.matches("OPTIMIZATION_r\\d+\\.md"))
-      finally stream.close()
-    }
-    val sources = scalaFiles(root.resolve("src")) ++ optDocs
-    val missing = sources.flatMap { src =>
-      val text = java.nio.file.Files.readString(src)
-      cited.findAllIn(text).toSet.toSeq.sorted
-        .filterNot(_.contains("example"))
-        .filterNot(resolves)
-        .map(name => s"${root.relativize(src)}: $name")
-    }
+    val missing = missingLines.filterNot(_.startsWith("BASELINE.md: "))
     assert(missing.isEmpty,
       s"source files cite artifacts missing from the tree: $missing " +
         "(commit the artifact or correct the citation)")
+    assert(repoCode === 0, repoOut)
+  }
+
+  test("the ledger check fails on a BASELINE.md naming a missing artifact") {
+    val root = Files.createTempDirectory("ledger-spec")
+    Files.writeString(root.resolve("BASELINE.md"), "oracle: CORRECTNESS_x_r99.json\n")
+    val (code, out) =
+      try checkLedger(root)
+      finally { Files.delete(root.resolve("BASELINE.md")); Files.delete(root) }
+    assert(code === 1, out)
+    assert(out.contains("BASELINE.md: CORRECTNESS_x_r99.json"), out)
   }
 }

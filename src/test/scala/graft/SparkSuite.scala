@@ -7,16 +7,11 @@ import org.apache.spark.sql.SparkSession
   * sf0.01 via graft.Verify (see tools/verify.sh). */
 trait SparkSuite {
   lazy val spark: SparkSession = SparkSuite.sessionLock.synchronized {
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // plan-string assertions read PushedFilters/ReadSchema; the default
-      // 100-char metadata truncation would cut them off mid-list
-      .config("spark.sql.maxMetadataStringLength", "10000")
-      .getOrCreate()
+    // pinned at 4 partitions on any host; plan-string assertions read
+    // PushedFilters/ReadSchema, which the default 100-char metadata
+    // truncation would cut off mid-list
+    GraftSession.local("graft-test", cpus = 4,
+      confs = Map("spark.sql.maxMetadataStringLength" -> "10000"))
   }
 
   val SF: String = "/root/testdata/sf0.001"

@@ -6,14 +6,7 @@ SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 MAIN=${3:-graft.Verify}
 CP="/opt/spark/jars/*:/root/repo/target/scala-2.13/classes"
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. "$(dirname "$0")/jvm_opens.sh"
 rm -rf "$OUT"
 # local-cluster masters (SPARK_GRAFT_MASTER) spawn executor JVMs via the
 # in-process Worker, whose command builder needs both of these: a release
@@ -21,8 +14,7 @@ rm -rf "$OUT"
 # from the env (load-spark-env.sh would set it under spark-submit)
 export SPARK_HOME="${SPARK_HOME:-/opt/spark}"
 export SPARK_SCALA_VERSION="${SPARK_SCALA_VERSION:-2.13}"
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-8} java $OPENS -Xmx12g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+java $OPENS -Xmx12g \
   -cp "$CP" "$MAIN" "$SF" "$OUT" 2>&1 | grep -v '^2[0-9/]*' || true
 if [ "$MAIN" = "graft.Verify" ]; then
   # sf1 runs emit the driver-format artifact for the CURRENT round
