@@ -46,10 +46,11 @@ object Bench {
     * twin `dedup_embedding_cosine_sampled` measures the identical
     * blocked-join code path at a corpus-size-aware ~25M-pair budget
     * (m = 8 at sf1, 800 at sf10 — Dedup.pairSampleModFor).
-    * The oracle/Verify surface is unaffected — this is bench-only, it
-    * is logged in the artifact, and SPARK_GRAFT_BENCH_EXACT_PAIRS=1
-    * restores the unbounded entry. Exclusion only applies when the
-    * sampled twin is actually in the catalog. */
+    * The oracle/Verify surface is unaffected — this is bench-only and
+    * it is logged in the artifact. Exclusion applies only to a full
+    * run (SPARK_GRAFT_BENCH_QUERIES unset) whose catalog holds the
+    * sampled twin: naming the entry in SPARK_GRAFT_BENCH_QUERIES times
+    * it. */
   private val UnboundedPairTool = "dedup_embedding_cosine"
   private val SampledPairTwin = "dedup_embedding_cosine_sampled"
 
@@ -82,14 +83,14 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
       case None        => SparkEntry.queries
     }
-    val includeExactPairs = sys.env.get("SPARK_GRAFT_BENCH_EXACT_PAIRS").contains("1")
     val excluded =
-      if (only.isEmpty && !includeExactPairs && subset.contains(SampledPairTwin))
+      if (only.isEmpty && subset.contains(SampledPairTwin))
         subset.keySet.intersect(Set(UnboundedPairTool))
       else Set.empty[String]
     excluded.foreach(n => System.err.println(
       s"[bench] $n excluded from the timed surface (sampled twin " +
-        s"$SampledPairTwin measures the same path; SPARK_GRAFT_BENCH_EXACT_PAIRS=1 restores it)"))
+        s"$SampledPairTwin measures the same path; name $n in " +
+        "SPARK_GRAFT_BENCH_QUERIES to time it)"))
     val selected = subset.filter { case (n, _) => !excluded(n) }
     // Sentinels run regardless of any subset filter (they are the run's
     // noise floor, not part of the measured surface), but only if present

@@ -114,17 +114,14 @@ object DedupSkewBench {
     // candidate-stage counts on the HOT corpus: capped vs uncapped vs
     // banding (no timed contract on uncapped — it exists to size the
     // blow-up the cap removes)
-    def shingled(dir: String): DataFrame =
-      Dedup.docShingleHashes(spark, dir).filter(size(col("sh")) > 0)
     val (cappedCand, cappedCandT) = timedCount(
-      Dedup.ngramCandidates(shingled(hotDir), Dedup.defaultMaxShingleDf))
+      Dedup.ngramCandidates(Dedup.docSignatures(spark, hotDir), Dedup.defaultMaxShingleDf))
     val (uncappedCand, uncappedCandT) = timedCount(
-      Dedup.ngramCandidates(shingled(hotDir), Long.MaxValue))
+      Dedup.ngramCandidates(Dedup.docSignatures(spark, hotDir), Long.MaxValue))
     val (baseCand, _) = timedCount(
-      Dedup.ngramCandidates(shingled(baseDir), Dedup.defaultMaxShingleDf))
+      Dedup.ngramCandidates(Dedup.docSignatures(spark, baseDir), Dedup.defaultMaxShingleDf))
     val (mhCand, mhCandT) = timedCount(
-      Dedup.minhashCandidates(shingled(hotDir)
-        .withColumn("sh", sort_array(col("sh")))))
+      Dedup.minhashCandidates(Dedup.docSignatures(spark, hotDir)))
 
     // end-to-end walls: the capped family must stay at base-level wall
     // on the hot corpus; minhash pays for (and emits) the real answer

@@ -51,22 +51,34 @@ object Dedup {
     """list_distinct(list_transform(range(1, greatest(len(toks) - 1, 1)),
       |  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))""".stripMargin
 
-  /** Hashed-shingle frame (doc_id, sh: array<long>) for every shingle
-    * consumer: shingles3_h64 emits the distinct 3-gram xxhash64 values
-    * directly — the identical hash stream to
-    * `transform(shingles3(toks), s -> xxhash64(s))` with zero
-    * shingle-string allocation (FunctionsSpec asserts the
-    * bit-identity); collision argument in the kernel scaladoc. Runs
-    * in a codegen'd kernel also because the declarative form gets its
-    * tokenization inlined per element when Catalyst pushes
-    * `size(sh) > 0` below the projection — see the Shingles3 kernel
-    * scaladoc for the full autopsy. */
-  private[graft] def docShingleHashes(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    Tables.loadBalanced(spark, dir, "documents")
-      .withColumn("sh", expr(s"shingles3_h64($toksSpark)"))
-      .select("doc_id", "sh")
+  /** Prepared signature frame (doc_id, sh, n) for every shingle
+    * consumer: sh = the distinct 3-gram xxhash64 values, sorted, n =
+    * their count, empty documents dropped. shingles3_h64 emits the
+    * identical hash stream to `transform(shingles3(toks), s ->
+    * xxhash64(s))` with zero shingle-string allocation (FunctionsSpec
+    * asserts the bit-identity); collision argument in the kernel
+    * scaladoc. Runs in a codegen'd kernel also because the declarative
+    * form gets its tokenization inlined per element when Catalyst
+    * pushes `size(sh) > 0` below the projection — see the Shingles3
+    * kernel scaladoc for the full autopsy. sh is sorted ONCE per
+    * document (minhash is order-invariant, so bands are unaffected) so
+    * every verification merge-counts a candidate pair
+    * (`inter_count_sorted`) instead of allocating an array_intersect
+    * hash set + result array per pair. The one build behind the
+    * inverted-index family, minhash LSH, both batch-vs-index probes
+    * (batch AND index side) and the streaming probe. */
+  private[graft] def prepSignatures(docs: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    docs.withColumn("sh", expr(s"shingles3_h64($toksSpark)"))
+      .filter(size(col("sh")) > 0)
+      .withColumn("sh", sort_array(col("sh")))
+      .withColumn("n", size(col("sh")))
+      .select("doc_id", "sh", "n")
   }
+
+  /** [[prepSignatures]] over `dir`'s documents table. */
+  private[graft] def docSignatures(spark: SparkSession, dir: String): DataFrame =
+    prepSignatures(Tables.loadBalanced(spark, dir, "documents"))
 
   private val docShinglesSqlCte =
     s"""toks_t AS (SELECT doc_id, $toksSql AS toks FROM documents),
@@ -211,7 +223,7 @@ object Dedup {
     * spec additionally covers the capped path with a planted hot
     * shingle. */
   def ngramJaccard(spark: SparkSession, dir: String, maxDf: Long): DataFrame =
-    ngramJaccardCapped(docShingleHashes(spark, dir), maxDf)
+    ngramJaccardCapped(docSignatures(spark, dir), maxDf)
 
   /** Hashed inverted index: one row per (doc, shingle) over a
     * HASHED-shingle (doc_id, sh: array<long>) frame — the shingle
@@ -251,8 +263,8 @@ object Dedup {
     * interpreted-vs-codegen loss vec_pq_assign's rejected in-row
     * argmin measured in r21. The join form also lets AQE pick
     * broadcast/SMJ per scale. Kept the self-join. */
-  private[graft] def ngramCandidates(docSh: DataFrame, maxDf: Long): DataFrame = {
-    val sh = hashedIndex(docSh).persist()
+  private[graft] def ngramCandidates(docSigs: DataFrame, maxDf: Long): DataFrame = {
+    val sh = hashedIndex(docSigs).persist()
     val cold = sh.join(hotShingles(sh, maxDf), Seq("s"), "left_anti")
     coldPairs(cold)
   }
@@ -271,8 +283,8 @@ object Dedup {
     * FULL sorted hash arrays (hot shingles included), so the cap's
     * only effect is recall: a pair is missed iff EVERY shingle it
     * shares is hot. */
-  private[graft] def ngramJaccardCapped(docSh: DataFrame, maxDf: Long): DataFrame =
-    pairIntersections(docSh, maxDf)
+  private[graft] def ngramJaccardCapped(docSigs: DataFrame, maxDf: Long): DataFrame =
+    pairIntersections(docSigs, maxDf)
       .filter(jaccardAtLeast08)
       .withColumn("jaccard", col("n_inter") / (col("na") + col("nb") - col("n_inter")))
       .select("doc_i", "doc_j", "jaccard")
@@ -296,7 +308,7 @@ object Dedup {
     lit(9L) * col("n_inter") >= lit(4L) * (col("na") + col("nb"))
 
   /** Exact shingle-intersection counts per candidate pair (doc_i <
-    * doc_j), with the hot-shingle DF cap: (doc_i, doc_j, n_inter, na,
+    * doc_j) of a [[prepSignatures]] frame, with the hot-shingle DF cap: (doc_i, doc_j, n_inter, na,
     * nb) where na/nb are the docs' distinct-shingle counts. Shared by
     * jaccard (symmetric similarity) and containment (asymmetric) —
     * both are pure functions of this frame.
@@ -313,24 +325,17 @@ object Dedup {
     * SURVIVING candidate; the arrays ride two hash joins keyed on
     * doc id, so nothing about the shape is quadratic in corpus
     * size. */
-  private def pairIntersections(docSh: DataFrame, maxDf: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(docSh.sparkSession)
+  private def pairIntersections(docSigs: DataFrame, maxDf: Long): DataFrame = {
+    graft.functions.GraftFunctions.register(docSigs.sparkSession)
     // persisted: feeds the DF stats, the pair self-join (via the
     // exploded index), and both verification joins; without it the
     // tokenize+shingle scan of every document runs four times
-    // (callers release via clearCache). sh sorted once per doc so
-    // verification is a merge, not a per-pair hash set.
-    val docs = docSh.filter(size(col("sh")) > 0)
-      .withColumn("sh", sort_array(col("sh")))
-      .withColumn("n", size(col("sh")).cast("long"))
-      .persist()
+    // (callers release via clearCache)
+    val docs = docSigs.withColumn("n", col("n").cast("long")).persist()
     val sh = hashedIndex(docs)
     val cold = sh.join(hotShingles(sh, maxDf), Seq("s"), "left_anti")
-    val candidates = coldPairs(cold)
-    candidates
-      .join(docs.select(col("doc_id").as("doc_i"), col("sh").as("sh_a"), col("n").as("na")), "doc_i")
-      .join(docs.select(col("doc_id").as("doc_j"), col("sh").as("sh_b"), col("n").as("nb")), "doc_j")
-      .withColumn("n_inter", expr("inter_count_sorted(sh_a, sh_b)").cast("long"))
+    interCounts(coldPairs(cold), docs, docs)
+      .withColumn("n_inter", col("n_inter").cast("long"))
       .select("doc_i", "doc_j", "n_inter", "na", "nb")
   }
 
@@ -349,14 +354,14 @@ object Dedup {
   private[graft] val containmentThreshold = 0.5
 
   def containment(spark: SparkSession, dir: String): DataFrame =
-    containmentCapped(docShingleHashes(spark, dir), defaultMaxShingleDf)
+    containmentCapped(docSignatures(spark, dir), defaultMaxShingleDf)
 
-  private[graft] def containmentCapped(docSh: DataFrame, maxDf: Long): DataFrame =
+  private[graft] def containmentCapped(docSigs: DataFrame, maxDf: Long): DataFrame =
     // each undirected candidate pair yields its two directions (the
     // containment denominator is the CONTAINED side's shingle count) in
     // ONE explode over the pair frame — a union of two projections
     // would execute the whole inverted-index DAG twice
-    pairIntersections(docSh, maxDf)
+    pairIntersections(docSigs, maxDf)
       // pair-level precondition: SOME direction reaches 0.5 iff
       // I/min(na,nb) ≥ 1/2 ⟺ 2·I ≥ min(na,nb) — exact integer
       // arithmetic (0.5 is a power of two, so the per-direction double
@@ -552,38 +557,45 @@ object Dedup {
   }
 
   def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    // doc_id, sh (hashed shingles), n — shared by candidate generation
-    // AND verification; the signature is deliberately NOT on this
-    // frame so the two verification joins don't recompute 64
-    // permutations per doc. Persisted: three consumers, one
-    // tokenize+shingle-hash scan — and the cache holds 8-byte longs,
-    // not ~30-byte shingle strings, so verification merge-counts longs
-    // (the collision argument is the kernel's scaladoc; the
-    // exact-string DuckDB oracle would catch one).
-    // sh is sorted ONCE per document here (minhash is order-invariant,
-    // so bands are unaffected) so verification can merge-count each
-    // candidate pair with inter_count_sorted instead of allocating an
-    // array_intersect hash set + result array per pair.
-    val docs = docShingleHashes(spark, dir).filter(size(col("sh")) > 0)
-      .withColumn("sh", sort_array(col("sh")))
-      .withColumn("n", size(col("sh")))
-      .persist()
-    val candidates = minhashCandidates(docs)
-    // Exact verification: merge-count over the sorted hash arrays
-    // (inter_count_sorted — one linear pass per pair, no per-pair
-    // allocation).
-    candidates
-      .join(docs.select(col("doc_id").as("doc_i"), col("sh").as("sh_a"), col("n").as("na")), "doc_i")
-      .join(docs.select(col("doc_id").as("doc_j"), col("sh").as("sh_b"), col("n").as("nb")), "doc_j")
-      .withColumn("n_inter", expr("inter_count_sorted(sh_a, sh_b)"))
-      // single-reference integer threshold BEFORE the ratio so pushdown
-      // inlines ONE merge-count per candidate, not two (see
-      // [[jaccardAtLeast08]])
+    // Persisted: candidate generation and both verification joins read
+    // it — one tokenize+shingle-hash scan, and the cache holds 8-byte
+    // longs, not ~30-byte shingle strings (the collision argument is
+    // the kernel's scaladoc; the exact-string DuckDB oracle would catch
+    // one). The signature is deliberately NOT on this frame, so the
+    // verification joins don't recompute 64 permutations per doc.
+    val docs = docSignatures(spark, dir).persist()
+    verifyJaccard(minhashCandidates(docs), docs, docs).orderBy("doc_i", "doc_j")
+  }
+
+  /** Exact-jaccard verification of a candidate frame (two id columns,
+    * named by the caller: (doc_i, doc_j) or (doc_new, doc_idx)) against
+    * the two sides' prepared signatures ([[prepSignatures]]): one
+    * linear `inter_count_sorted` merge per candidate (no per-pair
+    * allocation), the single-reference integer threshold BEFORE the
+    * ratio so pushdown inlines ONE merge per candidate (see
+    * [[jaccardAtLeast08]]). Unsorted: the catalog entries add their
+    * orderBy. Shared by whole-corpus minhash LSH and every
+    * batch-vs-index probe. */
+  private[graft] def verifyJaccard(candidates: DataFrame, left: DataFrame,
+      right: DataFrame): DataFrame = {
+    val Array(i, j) = candidates.columns
+    interCounts(candidates, left, right)
       .filter(jaccardAtLeast08)
       .withColumn("jaccard", col("n_inter") / (col("na") + col("nb") - col("n_inter")))
-      .select("doc_i", "doc_j", "jaccard")
-      .orderBy("doc_i", "doc_j")
+      .select(i, j, "jaccard")
+  }
+
+  /** The candidate frame joined to both sides' (sh, n) as (sh_a, na)
+    * and (sh_b, nb), plus the merge-counted `n_inter` — the one
+    * verification join shape behind [[verifyJaccard]] and the capped
+    * inverted-index family ([[pairIntersections]]). */
+  private def interCounts(candidates: DataFrame, left: DataFrame,
+      right: DataFrame): DataFrame = {
+    val Array(i, j) = candidates.columns
+    candidates
+      .join(left.select(col("doc_id").as(i), col("sh").as("sh_a"), col("n").as("na")), i)
+      .join(right.select(col("doc_id").as(j), col("sh").as("sh_b"), col("n").as("nb")), j)
+      .withColumn("n_inter", expr("inter_count_sorted(sh_a, sh_b)"))
   }
 
   // ---------------------------------------------------------------------
@@ -600,40 +612,17 @@ object Dedup {
   // ---------------------------------------------------------------------
   private[graft] val batchStride = 10L
   private[graft] val batchRes = 7L
+  private val isBatch: Column = col("doc_id") % batchStride === batchRes
 
+  /** The index side's band keys are computed in flight here; the
+    * bucketed twin reads the same two frames from its at-rest tables.
+    * Both run [[probeIndex]]. */
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    incrementalOver(docShingleHashes(spark, dir).filter(size(col("sh")) > 0)
-      .withColumn("n", size(col("sh"))))
-  }
-
-  /** Over a HASHED-shingle (doc_id, sh: array<long>, n) frame — shared
-    * by the catalog query and the planted-batch fixture in DedupSpec. */
-  private[graft] def incrementalOver(docsShN: DataFrame): DataFrame = {
-    // persisted: band generation for both sides + two verification
-    // joins all branch from it (callers release via clearCache).
-    // Sorted once per doc so verification merge-counts (see
-    // minhashLsh).
-    val docs = docsShN.withColumn("sh", sort_array(col("sh"))).persist()
-    val isBatch = col("doc_id") % batchStride === batchRes
-    val newBands = minhashBands(docs.filter(isBatch))
-    val idxBands = minhashBands(docs.filter(!isBatch)) // at rest in prod
-    val candidates = newBands.as("a")
-      .join(idxBands.as("b"),
-        col("a.band_idx") === col("b.band_idx")
-          && col("a.band_hash") === col("b.band_hash"))
-      .select(col("a.doc_id").as("doc_new"), col("b.doc_id").as("doc_idx"))
-      .distinct()
-    // Exact verification, same as whole-corpus minhash: candidates are
-    // few, shingle arrays are small
-    candidates
-      .join(docs.select(col("doc_id").as("doc_new"), col("sh").as("sh_a"), col("n").as("na")), "doc_new")
-      .join(docs.select(col("doc_id").as("doc_idx"), col("sh").as("sh_b"), col("n").as("nb")), "doc_idx")
-      .withColumn("n_inter", expr("inter_count_sorted(sh_a, sh_b)"))
-      .filter(jaccardAtLeast08) // one merge per candidate — see jaccardAtLeast08
-      .withColumn("jaccard", col("n_inter") / (col("na") + col("nb") - col("n_inter")))
-      .select("doc_new", "doc_idx", "jaccard")
-      .orderBy("doc_new", "doc_idx")
+    // persisted: band generation for both sides + both verification
+    // joins branch from it (callers release via clearCache)
+    val docs = docSignatures(spark, dir).persist()
+    val idx = docs.filter(!isBatch) // at rest in prod
+    probeIndex(docs.filter(isBatch), bandKeys(idx), idx).orderBy("doc_new", "doc_idx")
   }
 
   /** Same exactness argument as dedup_minhash_lsh (32×2 banding misses
@@ -684,26 +673,11 @@ object Dedup {
     minhashBands(docsSh).select(col("doc_id"),
       expr("xxhash64(band_idx, band_hash)").as("band_key"))
 
-  /** Prepared signature frame (doc_id, sh sorted, n) over any
-    * (doc_id, text) frame — the input contract of [[probeIndexed]];
-    * also how the index side is prepared. */
-  private[graft] def prepSignatures(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    docs.withColumn("sh", expr(s"shingles3_h64($toksSpark)"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sh", sort_array(col("sh")))
-      .withColumn("n", size(col("sh")))
-      .select("doc_id", "sh", "n")
-  }
-
   /** Build (or freshness-skip) the two at-rest index tables from
     * `dir`'s non-batch documents. Idempotent per corpus state. */
   private[graft] def ensureIndexed(spark: SparkSession, dir: String): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     val fp = graft.sources.Bucketing.sourceFingerprint(spark, s"$dir/documents.parquet")
-    val idxDocs = prepSignatures(Tables.loadBalanced(spark, dir, "documents"))
-      .filter(!(col("doc_id") % batchStride === batchRes))
-      .persist()
+    val idxDocs = docSignatures(spark, dir).filter(!isBatch).persist()
     graft.sources.Bucketing.ensureBucketed(
       bandKeys(idxDocs), bandIdxTable, idxBuckets, Seq("band_key"), fp)
     graft.sources.Bucketing.ensureBucketed(
@@ -711,34 +685,34 @@ object Dedup {
     idxDocs.unpersist(blocking = false): Unit
   }
 
-  /** Probe a prepared batch frame (doc_id, sh sorted, n — see
-    * [[prepSignatures]]) against the at-rest index tables: band-key
-    * equi-join for candidates, merge-count verification. UNSORTED —
-    * the batch catalog query adds its deterministic orderBy; the
-    * streaming probe (graft.streaming.DocDedupStream) appends each
+  /** THE batch-vs-index probe: a prepared batch frame (doc_id, sh
+    * sorted, n — see [[prepSignatures]]) against an index given as its
+    * (doc_id, band_key) frame and its prepared docs — band-key
+    * equi-join for candidates, [[verifyJaccard]] for the output. Only
+    * the index's SOURCE differs between callers: dedup_incremental
+    * computes both frames in flight, the bucketed twin and the
+    * streaming probe read the at-rest tables ([[probeIndexed]]).
+    * UNSORTED — the catalog entries add their deterministic orderBy;
+    * the streaming probe (graft.streaming.DocDedupStream) appends each
     * micro-batch's rows as they verify. */
-  private[graft] def probeIndexed(batch: DataFrame): DataFrame = {
-    val spark = batch.sparkSession
+  private[graft] def probeIndex(batch: DataFrame, idxBandKeys: DataFrame,
+      idxDocs: DataFrame): DataFrame = {
     val candidates = bandKeys(batch).as("a")
-      .join(spark.table(bandIdxTable).as("b"), col("a.band_key") === col("b.band_key"))
+      .join(idxBandKeys.as("b"), col("a.band_key") === col("b.band_key"))
       .select(col("a.doc_id").as("doc_new"), col("b.doc_id").as("doc_idx"))
       .distinct()
-    candidates
-      .join(batch.select(col("doc_id").as("doc_new"), col("sh").as("sh_a"),
-        col("n").as("na")), "doc_new")
-      .join(spark.table(idxDocsTable).select(col("doc_id").as("doc_idx"),
-        col("sh").as("sh_b"), col("n").as("nb")), "doc_idx")
-      .withColumn("n_inter", expr("inter_count_sorted(sh_a, sh_b)"))
-      .filter(jaccardAtLeast08) // one merge per candidate — see jaccardAtLeast08
-      .withColumn("jaccard", col("n_inter") / (col("na") + col("nb") - col("n_inter")))
-      .select("doc_new", "doc_idx", "jaccard")
+    verifyJaccard(candidates, batch, idxDocs)
   }
+
+  /** [[probeIndex]] against the at-rest tables [[ensureIndexed]] keeps. */
+  private[graft] def probeIndexed(batch: DataFrame): DataFrame =
+    probeIndex(batch, batch.sparkSession.table(bandIdxTable),
+      batch.sparkSession.table(idxDocsTable))
 
   def incrementalBucketed(spark: SparkSession, dir: String): DataFrame = {
     ensureIndexed(spark, dir)
-    val batch = prepSignatures(Tables.loadBalanced(spark, dir, "documents"))
-      .filter(col("doc_id") % batchStride === batchRes)
-      .persist() // feeds band generation AND the verification join
+    // persisted: feeds band generation AND the verification join
+    val batch = docSignatures(spark, dir).filter(isBatch).persist()
     probeIndexed(batch).orderBy("doc_new", "doc_idx")
   }
 
@@ -788,9 +762,14 @@ object Dedup {
     * hash in the catalog (60-bit token, 60-bit high half, 48-bit
     * winnowing gram) is an instantiation — one definition to fix if
     * the idiom ever changes. Spark: conv(hex, 16, 10); DuckDB:
-    * CAST('0x'||hex AS BIGINT). */
+    * CAST('0x'||hex AS BIGINT). The Spark side is split into the
+    * digest ([[md5Spark]]) and the slice ([[hexSliceSpark]]) so a
+    * caller needing two slices of one token can hash it once. */
   private[graft] def hexHashSpark(v: String, start: Int, len: Int): String =
-    s"CAST(conv(substring(md5(cast($v AS binary)), $start, $len), 16, 10) AS bigint)"
+    hexSliceSpark(md5Spark(v), start, len)
+  private def md5Spark(v: String): String = s"md5(cast($v AS binary))"
+  private def hexSliceSpark(hex: String, start: Int, len: Int): String =
+    s"CAST(conv(substring($hex, $start, $len), 16, 10) AS bigint)"
   private[graft] def hexHashSql(v: String, start: Int, len: Int): String =
     s"CAST('0x' || substr(md5($v), $start, $len) AS BIGINT)"
 
@@ -855,25 +834,42 @@ object Dedup {
     * is a zero-sum game — the real 10⁹⁺-doc fix is a wider signature
     * (e.g. 128-bit simhash with 4×32-bit bands), which only needs a
     * wider kernel, not a different plan shape. */
-  def simhashPairs(spark: SparkSession, dir: String, nBands: Int): DataFrame = {
-    require(60 % nBands == 0, s"nBands must divide 60, got $nBands")
-    val width = 60 / nBands
-    val mask = (1L << width) - 1
+  def simhashPairs(spark: SparkSession, dir: String, nBands: Int): DataFrame =
     // persisted: both self-join sides read it; the md5-per-token
     // simhash pass is the expensive part (callers release via clearCache)
-    val sims = simhashes(spark, dir).persist()
-    val banded = sims.select(col("doc_id"), col("simhash"),
-        explode(expr(
-          s"transform(sequence(0, ${nBands - 1}), b -> named_struct('band_idx', b, 'band_val', shiftright(simhash, b * $width) & $mask))"))
-          .as("band"))
-      .select(col("doc_id"), col("simhash"), col("band.band_idx"), col("band.band_val"))
+    simhashBandJoin(simhashes(spark, dir).persist(), Seq("simhash"), nBands)
+
+  /** THE simhash band join, over a (doc_id, words…) frame of 60-bit
+    * signature words: explode `nBands` equal slices (nBands/k per
+    * word, so no band straddles two words), equi-join on (band_idx,
+    * band_val) with a.doc_id < b.doc_id, hamming = Σ bit_count(xor)
+    * over the words, keep ≤ 3. Exact for hamming ≤ nBands−1 by
+    * pigeonhole. Shared by the 60-bit ([[simhashPairs]]) and 120-bit
+    * ([[simhashWidePairs]]) entries; only their signature builders
+    * differ. */
+  private def simhashBandJoin(sims: DataFrame, words: Seq[String],
+      nBands: Int): DataFrame = {
+    val perWord = nBands / words.size
+    require(nBands % words.size == 0 && 60 % perWord == 0,
+      s"nBands must split each 60-bit word evenly, got $nBands over ${words.size}")
+    val width = 60 / perWord
+    val mask = (1L << width) - 1
+    // band b slices word b / perWord: IF(b < perWord, w0, IF(b < 2·perWord, w1, …))
+    val sel = words.indices.init.foldRight(words.last) { (k, rest) =>
+      s"IF(b < ${(k + 1) * perWord}, ${words(k)}, $rest)" }
+    val keep = col("doc_id") +: words.map(col)
+    val banded = sims.select(keep :+ explode(expr(
+        s"transform(sequence(0, ${nBands - 1}), b -> named_struct('band_idx', b, 'band_val', shiftright($sel, (b % $perWord) * $width) & $mask))"))
+        .as("band"): _*)
+      .select(keep :+ col("band.band_idx") :+ col("band.band_val"): _*)
     banded.as("a")
       .join(banded.as("b"),
         col("a.band_idx") === col("b.band_idx")
           && col("a.band_val") === col("b.band_val")
           && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
+        words.map(w => bit_count(col(s"a.$w").bitwiseXOR(col(s"b.$w")))).reduce(_ + _)
+          .as("hamming"))
       .distinct()
       .filter(col("hamming") <= 3)
       .orderBy("doc_i", "doc_j")
@@ -900,7 +896,6 @@ object Dedup {
   // sum ([[simhashPairs]] scaladoc); widening the signature is the
   // move that relaxes both at once.
   // ---------------------------------------------------------------------
-  private[graft] def tokHash60HiSpark(v: String): String = hexHashSpark(v, 17, 15)
   private[graft] def tokHash60HiSql(v: String): String = hexHashSql(v, 17, 15)
 
   private[graft] def simhashesWide(spark: SparkSession, dir: String): DataFrame = {
@@ -908,16 +903,14 @@ object Dedup {
     // ONE md5 per token: both 15-hex-digit halves come from the same
     // 32-char digest, materialized once — the digest pass dominates
     // this query, and CollapseProject keeps a non-cheap multi-consumer
-    // alias like md5s un-inlined, so the two conv scans below really do
-    // share it rather than re-hashing
+    // alias like md5s un-inlined, so the two slice scans below really
+    // do share it rather than re-hashing
     Tables.loadBalanced(spark, dir, "documents")
       .withColumn("toks", expr(toksSpark))
       .filter(size(col("toks")) > 0)
-      .withColumn("md5s", expr("transform(toks, x -> md5(cast(x AS binary)))"))
-      .withColumn("sim_lo",
-        expr("simhash60(transform(md5s, h -> CAST(conv(substring(h, 1, 15), 16, 10) AS bigint)))"))
-      .withColumn("sim_hi",
-        expr("simhash60(transform(md5s, h -> CAST(conv(substring(h, 17, 15), 16, 10) AS bigint)))"))
+      .withColumn("md5s", expr(s"transform(toks, x -> ${md5Spark("x")})"))
+      .withColumn("sim_lo", expr(s"simhash60(transform(md5s, h -> ${hexSliceSpark("h", 1, 15)}))"))
+      .withColumn("sim_hi", expr(s"simhash60(transform(md5s, h -> ${hexSliceSpark("h", 17, 15)}))"))
       .select("doc_id", "sim_lo", "sim_hi")
   }
 
@@ -928,30 +921,10 @@ object Dedup {
        |  ${simhashSqlOver(tokHash60HiSql("x"))} AS sim_hi
        |FROM toks_t WHERE len(toks) > 0)""".stripMargin
 
-  def simhashWidePairs(spark: SparkSession, dir: String): DataFrame = {
+  def simhashWidePairs(spark: SparkSession, dir: String): DataFrame =
     // persisted: both self-join sides; two md5-per-token majority
     // votes are the expensive part (callers release via clearCache)
-    val sims = simhashesWide(spark, dir).persist()
-    val banded = sims.select(col("doc_id"), col("sim_lo"), col("sim_hi"),
-        explode(expr(
-          """transform(sequence(0, 3), b -> named_struct(
-            |  'band_idx', b,
-            |  'band_val', shiftright(IF(b < 2, sim_lo, sim_hi), (b % 2) * 30) & 1073741823))"""
-            .stripMargin)).as("band"))
-      .select(col("doc_id"), col("sim_lo"), col("sim_hi"),
-        col("band.band_idx"), col("band.band_val"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band_idx") === col("b.band_idx")
-          && col("a.band_val") === col("b.band_val")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"),
-        (bit_count(col("a.sim_lo").bitwiseXOR(col("b.sim_lo")))
-          + bit_count(col("a.sim_hi").bitwiseXOR(col("b.sim_hi")))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= 3)
-      .orderBy("doc_i", "doc_j")
-  }
+    simhashBandJoin(simhashesWide(spark, dir).persist(), Seq("sim_lo", "sim_hi"), nBands = 4)
 
   val simhashWidePairsSql: String =
     s"""WITH $simhashesWideSqlCte

@@ -539,25 +539,40 @@ object Similarity {
 
   private[graft] def ivfPqTopKOver(corpus: DataFrame,
       queryStride: Int = 1, emitMod: Boolean = false): DataFrame = {
+    val (centroids, codebook, postings) = ivfPqIndex(corpus)
+    withQueryMod(adcTopK(ivfPqQueries(corpus, queryStride), codebook, centroids,
+      postings), queryStride, emitMod)
+  }
+
+  /** THE IVF-PQ index build over an (vec_id, embedding) corpus: norm →
+    * coarse quantizer + inverted file ([[ivfIndex]]) → persisted
+    * codebook → postings (vec_id, cluster, norm, embedding, codes).
+    * Returns (centroids, codebook, postings): the inline entry queries
+    * them, [[buildIvfPqIndex]] writes them. The codebook feeds two
+    * broadcast cross-joins (corpus encode, qtab) and its LINEAGE is a
+    * full-corpus TakeOrdered scan that would re-execute per consumer
+    * without the persist (same rationale as ivfIndex's centroids;
+    * callers release via clearCache). */
+  private def ivfPqIndex(corpus: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     val e = corpus.withColumn("norm", expr("vec_norm(embedding)"))
       .select("vec_id", "embedding", "norm")
     val (centroids, lists) = ivfIndex(e)
-    // codebook feeds two broadcast cross-joins (corpus encode, qtab)
-    // and q feeds two consumers (qtab, probes) — each is tiny, but its
-    // LINEAGE is a full-corpus filter/TakeOrdered scan that would
-    // re-execute per consumer without the persist (same rationale as
-    // ivfIndex's centroids; callers release via clearCache)
     val codebook = ivfPqCodebook(e).persist()
     val postings = lists.select("vec_id", "cluster", "norm", "embedding")
       .join(pqCodes(e, codebook, ivfPqBlocks)
         .select("vec_id", ivfCodeCols: _*), Seq("vec_id"))
-    val q = e.filter(col("vec_id") % queryModFor(queryStride) === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"))
-      .persist()
-    withQueryMod(adcTopK(q, codebook, centroids, postings), queryStride, emitMod)
+    (centroids, codebook, postings)
   }
+
+  /** The probe-set query vectors (query_id, q_emb, q_norm), shared by
+    * the inline and served paths. Persisted: qtab and the probes both
+    * read it, and its lineage is a full-corpus filter scan. */
+  private def ivfPqQueries(corpus: DataFrame, queryStride: Int): DataFrame =
+    corpus.filter(col("vec_id") % queryModFor(queryStride) === 0)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
+        expr("vec_norm(embedding)").as("q_norm"))
+      .persist()
 
   /** Append the self-describing `query_mod` column on the catalog
     * surface (see [[annLshOver]]'s emitMod note); adcTopK's final
@@ -708,18 +723,11 @@ object Similarity {
   // ---------------------------------------------------------------------
   private[graft] def buildIvfPqIndex(spark: SparkSession, dir: String,
       indexDir: String): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    val e = Tables.loadBalanced(spark, dir, "embeddings")
-      .withColumn("norm", expr("vec_norm(embedding)"))
-      .select("vec_id", "embedding", "norm")
-    val (centroids, lists) = ivfIndex(e)
-    val codebook = ivfPqCodebook(e).persist()
+    val (centroids, codebook, postings) =
+      ivfPqIndex(Tables.loadBalanced(spark, dir, "embeddings"))
     centroids.write.mode("overwrite").parquet(s"$indexDir/centroids")
     codebook.write.mode("overwrite").parquet(s"$indexDir/codebook")
-    lists.select("vec_id", "cluster", "norm", "embedding")
-      .join(pqCodes(e, codebook, ivfPqBlocks)
-        .select("vec_id", ivfCodeCols: _*), Seq("vec_id"))
-      .write.mode("overwrite").partitionBy("cluster")
+    postings.write.mode("overwrite").partitionBy("cluster")
       .parquet(s"$indexDir/postings")
   }
 
@@ -731,11 +739,7 @@ object Similarity {
     val centroids = spark.read.parquet(s"$indexDir/centroids")
     val codebook = spark.read.parquet(s"$indexDir/codebook")
     val postings = spark.read.parquet(s"$indexDir/postings")
-    val q = Tables.loadBalanced(spark, dir, "embeddings")
-      .filter(col("vec_id") % queryModFor(queryStride) === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        expr("vec_norm(embedding)").as("q_norm"))
-      .persist()
+    val q = ivfPqQueries(Tables.loadBalanced(spark, dir, "embeddings"), queryStride)
     withQueryMod(adcTopK(q, codebook, centroids, postings), queryStride, emitMod)
   }
 

@@ -127,11 +127,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     val dup = Seq(
       (100L, s"$boiler the quick brown fox jumps over the lazy dog again and again today"),
       (101L, s"$boiler the quick brown fox jumps over the lazy dog again and again tonight"))
-    graft.functions.GraftFunctions.register(spark)
-    val docs = (unrelated ++ dup).toDF("doc_id", "text")
-      .withColumn("sh", org.apache.spark.sql.functions.expr(
-        s"shingles3_h64(${Dedup.toksSpark})"))
-      .select("doc_id", "sh")
+    val docs = Dedup.prepSignatures((unrelated ++ dup).toDF("doc_id", "text"))
     val uncapped = Dedup.ngramCandidates(docs, maxDf = Long.MaxValue).count()
     val capped = Dedup.ngramCandidates(docs, maxDf = 8).count()
     // every doc shares the boilerplate shingles -> uncapped candidates
@@ -162,11 +158,7 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
       (i, s"unique lead$i $boiler unique tail${i}a tail${i}b tail${i}c"))
     val short = (100L, boiler)
     val long = (101L, s"$boiler plus a genuinely unique continuation sentence here")
-    graft.functions.GraftFunctions.register(spark)
-    val docs = (carriers :+ short :+ long).toDF("doc_id", "text")
-      .withColumn("sh", org.apache.spark.sql.functions.expr(
-        s"shingles3_h64(${Dedup.toksSpark})"))
-      .select("doc_id", "sh")
+    val docs = Dedup.prepSignatures((carriers :+ short :+ long).toDF("doc_id", "text"))
     def pairs(maxDf: Long): Set[(Long, Long)] =
       Dedup.containmentCapped(docs, maxDf)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -187,8 +179,19 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     val p6 = Dedup.simhashPairs(spark, SF, nBands = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // both band counts are exact for hamming <= 3 by pigeonhole, so the
-    // pair sets must agree perfectly
+    // pair sets must agree perfectly — with each other AND with the
+    // brute-force all-pairs scan (a bug in the shared band join would
+    // otherwise hide behind two equally wrong banded outputs)
     assert(p4 === p6)
+    import org.apache.spark.sql.functions._
+    val sims = Dedup.simhashValues(spark, SF)
+    val brute = sims.as("a").join(sims.as("b"), col("a.doc_id") < col("b.doc_id"))
+      .filter(bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))) <= 3)
+      .select(col("a.doc_id"), col("b.doc_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(brute.nonEmpty, "test data must contain simhash near-dups")
+    assert(p4 === brute,
+      s"banding missed ${brute.diff(p4)} / fabricated ${p4.diff(brute)}")
     spark.catalog.clearCache()
   }
 
@@ -433,20 +436,16 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
 
   test("containment catches a quoted subset that jaccard misses, in one direction only") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val quoted = "the quick brown fox jumps over the lazy dog today"
     val padding = (1 to 40).map(i => s"filler$i").mkString(" ")
     // doc 2 fully contains doc 1's text plus 40 unique tokens; doc 3/4
     // are a symmetric near-dup pair that must appear in BOTH directions
-    val docs = Seq(
+    val docs = Dedup.prepSignatures(Seq(
       (1L, quoted),
       (2L, s"$quoted $padding"),
       (3L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (4L, "alpha beta gamma delta epsilon zeta eta theta iota lambda"))
-      .toDF("doc_id", "text")
-      .withColumn("sh", org.apache.spark.sql.functions.expr(
-        s"shingles3_h64(${Dedup.toksSpark})"))
-      .select("doc_id", "sh")
+      .toDF("doc_id", "text"))
     val got = Dedup.containmentCapped(docs, Long.MaxValue).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(got((1L, 2L)) === 1.0, s"doc 1 is fully contained in doc 2: $got")
@@ -494,27 +493,28 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
 
   test("incremental dedup pairs batch docs against the index only, never batch-vs-batch") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val base = "the quick brown fox jumps over the lazy dog again and again at dawn"
     // ids 7 & 17 are batch (%10==7); 3 & 4 are index. 7≈17 (batch-batch
     // near-dup: must NOT pair), 7≈3 (batch-index: must pair), 4 unique.
-    val docs = Seq(
+    val dir = java.nio.file.Files.createTempDirectory("graft_incr").toString
+    Seq(
       (7L, s"$base today"),
       (17L, s"$base tonight"),
       (3L, s"$base forever"),
       (4L, (1 to 20).map(i => s"unrelated$i").mkString(" ")))
       .toDF("doc_id", "text")
-      .withColumn("sh", org.apache.spark.sql.functions.expr(
-        s"shingles3_h64(${Dedup.toksSpark})"))
-      .filter(org.apache.spark.sql.functions.size(
-        org.apache.spark.sql.functions.col("sh")) > 0)
-      .withColumn("n", org.apache.spark.sql.functions.size(
-        org.apache.spark.sql.functions.col("sh")))
-      .select("doc_id", "sh", "n")
-    val got = Dedup.incrementalOver(docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got === Set((7L, 3L), (17L, 3L)),
-      s"want batch→index pairs only (no 7↔17 batch-batch pair): $got")
+      .write.parquet(s"$dir/documents.parquet")
+    // both index sources: band keys + docs computed in flight, and the
+    // at-rest bucketed tables (built from this corpus by ensureIndexed;
+    // the fingerprint gate rebuilds them for the next corpus that asks)
+    val sources = Map(
+      "in-flight" -> Dedup.incrementalDedup(spark, dir),
+      "at-rest" -> Dedup.incrementalBucketed(spark, dir))
+    sources.foreach { case (source, df) =>
+      val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got === Set((7L, 3L), (17L, 3L)),
+        s"$source index: want batch→index pairs only (no 7↔17 batch-batch pair): $got")
+    }
     spark.catalog.clearCache()
   }
 

@@ -20,6 +20,6 @@ export SPARK_SCALA_VERSION="${SPARK_SCALA_VERSION:-2.13}"
 # fails the script, while a grep that filters every line does not
 SPARK_GRAFT_BENCH_REPS=$REPS \
 SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_REPORT_PATH="$REPORT" \
-java $OPENS -Xmx12g -XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=32 \
+java $OPENS -Xmx$HEAP -XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=32 \
   -cp "$CP" graft.Bench 2>&1 | { grep -vE '^2[0-9/]' || true; }
 [ -f "$REPORT" ] || { echo "[bench.sh] FAILED: no report at $REPORT" >&2; exit 1; }

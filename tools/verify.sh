@@ -14,7 +14,7 @@ rm -rf "$OUT"
 # from the env (load-spark-env.sh would set it under spark-submit)
 export SPARK_HOME="${SPARK_HOME:-/opt/spark}"
 export SPARK_SCALA_VERSION="${SPARK_SCALA_VERSION:-2.13}"
-java $OPENS -Xmx12g \
+java $OPENS -Xmx$HEAP \
   -cp "$CP" "$MAIN" "$SF" "$OUT" 2>&1 | grep -v '^2[0-9/]*' || true
 if [ "$MAIN" = "graft.Verify" ]; then
   # sf1 runs emit the driver-format artifact for the CURRENT round
